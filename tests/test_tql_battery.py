@@ -33,6 +33,11 @@ def loadlines(name):
         return f.read().splitlines() + ["\n"]
 
 
+class Golden(str):
+    """Name of a GOLDEN_DIR file holding a case's expect lines; the test
+    reads it through loadlines when it runs."""
+
+
 PAY5 = "\n".join([
     "NAME,TIME,VALUE,BOOL",
     "wave.sin,1676432361,0.000000,true",
@@ -159,7 +164,7 @@ NDJSON( rownum(true) )
 FAKE( linspace(0, 100, 100) )
 MAP_MOVAVG(1, value(0), 10, noWait(true))
 CSV( precision(4) )
-""", loadlines("movavg_result_nowait.csv"), None),
+""", Golden("movavg_result_nowait.csv"), None),
     ("MAP_LOWPASS", """
 FAKE(arrange(1, 10, 1))
 MAPVALUE(1, value(0) + simplex(1, value(0))*3)
@@ -215,12 +220,12 @@ CSV()
 FAKE( sphere(4, 4) )
 PUSHKEY('test')
 CSV( header(true), precision(6) )
-""", loadlines("sphere_4_4.csv"), None),
+""", Golden("sphere_4_4.csv"), None),
     ("FAKE_sphere_0_0", """
 FAKE( sphere(0, 0) )
 PUSHKEY('test')
 CSV( header(false), precision(6) )
-""", loadlines("sphere_0_0.csv"), None),
+""", Golden("sphere_0_0.csv"), None),
     ("FFT_not_enough_samples_0", """
 FAKE( linspace(0, 10, 100) )
 FFT()
@@ -229,10 +234,13 @@ CSV()
 ]
 
 
-@needs_goldens
 @pytest.mark.parametrize("name,script,expect,payload",
                          TQL_CASES, ids=[c[0] for c in TQL_CASES])
 def test_tqltest_battery(spark, name, script, expect, payload):
+    if isinstance(expect, Golden):
+        if not os.path.isdir(GOLDEN_DIR):
+            pytest.skip("reference goldens not available")
+        expect = loadlines(expect)
     out = run_script(spark, script, payload=payload)
     assert out == "\n".join(expect)
 
@@ -306,7 +314,6 @@ CSV(header(true))""",
 ]
 
 
-@needs_goldens
 @pytest.mark.parametrize("name,script,expect",
                          TASK_CASES, ids=[c[0] for c in TASK_CASES])
 def test_tasktest_battery(spark, name, script, expect):
@@ -314,7 +321,6 @@ def test_tasktest_battery(spark, name, script, expect):
     assert out == "\n".join(expect) + "\n"
 
 
-@needs_goldens
 def test_markdown_template(spark):
     """CSV_payload_MAPVALUE_MARKDOWN_TEMPLATE — Go-template MARKDOWN with
     IsFirst/IsLast sections and float %v shortest-repr values."""
@@ -333,7 +339,6 @@ MARKDOWN({
         assert want in out
 
 
-@needs_goldens
 def test_fake_error_messages(spark):
     """FAKE error-message parity, exact text (tql_test.go:1520-1546)."""
     for script, msg in [
@@ -353,7 +358,6 @@ def test_fake_error_messages(spark):
         assert msg in str(ei.value)
 
 
-@needs_goldens
 def test_fft_tuple_len_error(spark):
     """FFT over 3-wide tuples raises the reference's exact message
     (fm_fourier.go:63)."""
@@ -368,7 +372,6 @@ CSV()
 """)
 
 
-@needs_goldens
 def test_shell_battery_case(spark):
     """SHELL_shell-command: combined stdout split on newline keeps the
     final empty record (fm_shell.go:131-135)."""
@@ -583,7 +586,6 @@ CSV(timeformat("ns"), heading(true), precision(7))""",
 
 
 
-@needs_goldens
 @pytest.mark.parametrize("name,script,expect,payload,err,now_ns",
                          TASK2_CASES, ids=[c[0] for c in TASK2_CASES])
 def test_tasktest_battery2(spark, name, script, expect, payload, err, now_ns):
@@ -602,7 +604,6 @@ def test_tasktest_battery2(spark, name, script, expect, payload, err, now_ns):
 # ---------------------------------------------------------------------------
 
 
-@needs_goldens
 def test_args_empty_record(spark):
     """TestArgs: ARGS() with no invocation args emits ONE empty-tuple
     record that downstream MAPVALUEs populate (fm_context.go fmArgsParam)."""
@@ -627,7 +628,6 @@ def _capture_doer_logs():
     return records, (lambda: D.LOG.removeHandler(h))
 
 
-@needs_goldens
 @pytest.mark.parametrize("src_stmt", ["ARGS()", "FAKE( args() )"])
 def test_when_do_subpipeline_args(spark, src_stmt):
     """TestWhen do() sub-pipelines: args flow into the nested task via
@@ -648,7 +648,6 @@ DISCARD()
         cleanup()
 
 
-@needs_goldens
 def test_discard_sink_subroutine(spark):
     """TestDiscardSink: a CSV() sink inside do() warns and is inert; the
     nested WHEN/doLog still fires with the evaluated args."""
@@ -676,7 +675,6 @@ DISCARD()
         cleanup()
 
 
-@needs_goldens
 def test_discard_sink_unicode(spark):
     records, cleanup = _capture_doer_logs()
     try:
@@ -706,7 +704,6 @@ CSV()
 JSON_NULL_SRC = 'FAKE(json({ ["A", 123], ["B", null], ["C", 234] }))\n'
 
 
-@needs_goldens
 @pytest.mark.parametrize("opt,expect", [
     ('nullValue("<NULL>")', ["A,123", "B,<NULL>", "C,234", "\n"]),
     ('substituteNull("<NULL>")', ["A,123", "B,<NULL>", "C,234", "\n"]),
@@ -721,7 +718,6 @@ def test_json_to_csv_nullvalue(spark, opt, expect):
     assert out == "\n".join(expect)
 
 
-@needs_goldens
 def test_csv_logprogress_option(spark):
     """TestCsvToCsvWithLogProgress: logProgress(n) is accepted (no-op)."""
     out = run_script(spark, """
@@ -732,7 +728,6 @@ CSV( heading(true) )
         ["column0,column1", "1,line1", "2,line2", "3,", "4,line4", "\n"])
 
 
-@needs_goldens
 def test_csv_to_json_envelope(spark):
     """TestCsvToJson case 1: untyped CSV -> JSON envelope."""
     import json as _json
@@ -744,7 +739,6 @@ def test_csv_to_json_envelope(spark):
     assert d["data"]["rows"] == [["A", "123"], ["B", "456"], ["C", "789"]]
 
 
-@needs_goldens
 @pytest.mark.parametrize("script,err", [
     ("FAKE( arrange(0, 1, 1) )\nINSERT(table('example'))\nJSON()",
      'line 2, column 1: "INSERT()" is not applicable for MAP '
@@ -764,7 +758,6 @@ def test_src_error_structure(spark, script, err):
     assert str(ei.value) == err
 
 
-@needs_goldens
 def test_pragma_log_level(spark):
     """tql_test.go TestPragma: #pragma lines are consumed; the SCRIPT
     console.log runs and all 5 records yield into the JSON envelope."""
@@ -780,7 +773,6 @@ JSON()
     assert len(d["data"]["rows"]) == 5
 
 
-@needs_goldens
 def test_lowpass_alpha_error(spark):
     """fm_monad_test.go TestMapLowPass: exact invalid-alpha message."""
     with pytest.raises(ValueError,
@@ -792,7 +784,6 @@ CSV()
 """)
 
 
-@needs_goldens
 def test_histogram_partial_order(spark):
     """fm_stat.go sortCategoryNames (TestHistogramOrder): a PARTIAL
     order() lists those categories first, the rest follow sorted."""
@@ -804,7 +795,6 @@ CSV( header(true), precision(0) )""")
     assert out.splitlines()[0] == "low,high,Cat.B,Cat.A"
 
 
-@needs_goldens
 def test_bins_arg_count_error(spark):
     """fm_stat.go:251 exact bins() arity error."""
     with pytest.raises(ValueError,
@@ -821,7 +811,6 @@ CSV()""")
 # ---------------------------------------------------------------------------
 
 
-@needs_goldens
 def test_sql_admin_verbs(spark, sf_dir):
     """SQL('show indexgap'/'show tagindexgap'/'show tags T'/'desc T'/
     'EXEC table_flush(T)') route to the catalog views with the
@@ -850,7 +839,6 @@ def test_sql_admin_verbs(spark, sf_dir):
     assert any(ln.startswith("TS,datetime,31,base time") for ln in lines)
 
 
-@needs_goldens
 def test_http_file_sources(spark):
     """task_test.go TestHttpFile: STRING/BYTES/CSV file() over http —
     fetched driver-side (fm_csv.go:115-135), literal-rows path."""
@@ -931,7 +919,6 @@ TEXT({
 ]
 
 
-@needs_goldens
 @pytest.mark.parametrize("name,script,want", TEMPLATE_CASES,
                          ids=[c[0] for c in TEMPLATE_CASES])
 def test_script_to_template(spark, name, script, want):
@@ -941,7 +928,6 @@ def test_script_to_template(spark, name, script, want):
     assert run_script(spark, script) == want
 
 
-@needs_goldens
 def test_script_exception_verbatim(spark):
     """fm_script_test.go TestScriptException, verbatim: try/catch/throw,
     goja's missing-member message, thrown strings caught as values."""
@@ -972,7 +958,6 @@ CSV()
         ("ERROR", "other error")]
 
 
-@needs_goldens
 def test_jslite_arrows_and_try(spark):
     """Arrow functions (all three shapes) + try/finally composition."""
     out = run_script(spark, """
@@ -995,7 +980,6 @@ CSV()
     assert out.splitlines()[:2] == ["2,5,42,boom", "1,0,0,done"]
 
 
-@needs_goldens
 def test_rest_client_http_dsl(spark):
     """tql_test.go TestRestClient: HTTP-DSL source with ?/& query
     extension lines (percent-encoded on the wire) -> raw response record."""
@@ -1031,7 +1015,6 @@ TEXT()
         srv.shutdown()
 
 
-@needs_goldens
 def test_binaryformat_variants():
     """TestDatabaseBinaryTql's four binaryformat() renderings
     (mods/util/types.go BinaryFormatter), byte-exact."""
@@ -1109,7 +1092,6 @@ CSV()""",
 ]
 
 
-@needs_goldens
 @pytest.mark.parametrize("script,want", SQLSELECT_DUMPS,
                          ids=[f"dump{i}" for i in range(len(SQLSELECT_DUMPS))])
 def test_sqlselect_dump_battery(spark, script, want):
@@ -1119,7 +1101,6 @@ def test_sqlselect_dump_battery(spark, script, want):
     assert out == _norm_sql(want) + "\n\n"
 
 
-@needs_goldens
 def test_yield_array_envelope_columns(spark):
     """fm_script_test js-yieldArray-*: without a $.result the SOURCE's
     column list survives into the JSON envelope even when yielded rows
@@ -1158,7 +1139,6 @@ JSON()"""))
     assert d["data"]["rows"] == [[1, 2.3, "3.4", True]]
 
 
-@needs_goldens
 def test_script_system_module_and_params(spark):
     """fm_script_test js-system-free-os-memory/gc/now, js-params,
     js-invalid-module: the @jsh/system module, single-valued $.params
@@ -1196,7 +1176,6 @@ CSV()""", params={"p1": ["1", "2"], "p2": ["abc"]}) == "1,2,abc\n\n"
 CSV()""")
 
 
-@needs_goldens
 def test_script_inflight_vars(spark):
     """TestScriptSystemInflight: $.inflight().set/get bridges the SET()/
     $name record-variable store, both directions."""
@@ -1250,7 +1229,6 @@ CSV(precision(6))
         assert out == f.read() + "\n"
 
 
-@needs_goldens
 def test_database_binary_tql_arc(spark):
     """tql_test.go TestDatabaseBinaryTql VERBATIM: DDL-created engine
     table -> INSERT with '0x..' binary coercion -> SELECTs in all four
