@@ -1089,11 +1089,17 @@ def _q_rollup_routed(spark, sf_dir):
     answer is served from the sec->min->hour rollup cascade, never the raw
     table.  Exactness: count/min/max/first/last are exactly mergeable; avg is
     derived from merged sum/cnt (rounded like every float aggregate here)."""
+    import hashlib
     import os
+    import tempfile
 
     from neo_server_spark.sqlx.rollup import RollupRouter
 
-    base = f"/tmp/neo_rollups_{os.path.basename(os.path.normpath(sf_dir))}"
+    # one cache per input: the dataset's path and its events file's stat
+    ev = os.stat(os.path.join(sf_dir, "events.parquet"))
+    key = hashlib.sha256(f"{os.path.abspath(sf_dir)}\0{ev.st_size}\0"
+                         f"{ev.st_mtime_ns}".encode()).hexdigest()[:16]
+    base = os.path.join(tempfile.gettempdir(), f"neo_rollups_{key}")
     router = RollupRouter(spark, base)
     if not os.path.isdir(os.path.join(base, "rollup_hour")):
         router.build(nio.events_as_tag(spark, sf_dir))

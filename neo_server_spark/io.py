@@ -14,8 +14,13 @@ table: ``event_type`` -> tag name, ``ts`` (epoch ns) -> basetime, ``value``.
 
 from __future__ import annotations
 
+import contextlib
+import math
 import os
+import re
+import uuid
 from collections.abc import Sequence
+from datetime import date
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -250,6 +255,231 @@ def write_tag_table(
         # gets the same effect structurally (machbase_template.conf:520)
         out = out.sortWithinPartitions(name_col, time_col)
     out.write.partitionBy(*parts).mode(mode).parquet(path)
+
+
+# ---- driver-side appender for rows the server already holds -------------
+
+_LONG_MIN, _LONG_MAX = -(1 << 63), (1 << 63) - 1
+_DAY_NS = 86_400 * 10**9
+_EPOCH_ORDINAL = 719_163                 # date(1970, 1, 1).toordinal()
+#: Spark's partition value for a null ``_day`` (a null ``time``)
+_NULL_DAY = "__HIVE_DEFAULT_PARTITION__"
+#: Python scalar -> the Spark type ``createDataFrame`` infers for it
+_INFERRED = {bool: "BooleanType", int: "LongType", float: "DoubleType",
+             str: "StringType"}
+#: what java.lang.String.trim() strips; UTF8String.toLongExact also strips DEL
+_JAVA_WS = "".join(map(chr, range(33)))
+_LONG_TEXT = re.compile(r"[+-]?[0-9]+")
+#: java.lang.Double.parseDouble's grammar (after trim)
+_DOUBLE_TEXT = re.compile(
+    r"[+-]?(?:NaN|Infinity|(?:(?:[0-9]+\.?[0-9]*|\.[0-9]+)(?:[eE][+-]?[0-9]+)?"
+    r"|0[xX](?:[0-9a-fA-F]+\.?|[0-9a-fA-F]*\.[0-9a-fA-F]+)[pP][+-]?[0-9]+)"
+    r"[fFdD]?)")
+#: Cast.processFloatingPointSpecialLiterals, tried when parseDouble fails
+_DOUBLE_WORDS = {"inf": math.inf, "+inf": math.inf, "infinity": math.inf,
+                 "+infinity": math.inf, "-inf": -math.inf,
+                 "-infinity": -math.inf, "nan": math.nan}
+
+
+def _cast_error(v, src: str, dst: str) -> ValueError:
+    return ValueError(
+        f"[CAST_INVALID_INPUT] The value '{v}' of the type \"{src}\" cannot "
+        f"be cast to \"{dst}\" because it is malformed. Correct the value as "
+        f"per the syntax, or change its target type. Use `try_cast` to "
+        f"tolerate malformed input and return NULL instead. SQLSTATE: 22018")
+
+
+def _to_long(v, kind: type):
+    """Spark's ANSI ``CAST(v AS BIGINT)`` of a value inferred as ``kind``."""
+    if v is None or kind is int:
+        return v
+    if kind is str:
+        s = v.strip(_JAVA_WS + "\x7f")
+        if _LONG_TEXT.fullmatch(s) and _LONG_MIN <= int(s) <= _LONG_MAX:
+            return int(s)
+        raise _cast_error(v, "STRING", "BIGINT")
+    if kind is float:
+        if math.isfinite(v) and math.floor(v) <= 2**63 and \
+                math.ceil(v) >= -2**63:
+            return min(max(int(v), _LONG_MIN), _LONG_MAX)
+        raise ValueError(
+            f"[CAST_OVERFLOW] The value {v!r} of the type \"DOUBLE\" cannot "
+            f"be cast to \"BIGINT\" due to an overflow. Use `try_cast` to "
+            f"tolerate overflow and return NULL instead. SQLSTATE: 22003")
+    return int(v)                        # bool
+
+
+def _to_double(v, kind: type):
+    """Spark's ANSI ``CAST(v AS DOUBLE)`` of a value inferred as ``kind``."""
+    if v is None or kind is float:
+        return v
+    if kind is not str:
+        return float(v)                  # long, bool
+    s = v.strip(_JAVA_WS)
+    if _DOUBLE_TEXT.fullmatch(s):
+        s = s[:-1] if s[-1] in "fFdD" else s
+        if "x" not in s and "X" not in s:
+            return float(s)
+        try:
+            return float.fromhex(s)
+        except OverflowError:
+            return -math.inf if s.startswith("-") else math.inf
+    w = _DOUBLE_WORDS.get(s.lower())
+    if w is None:
+        raise _cast_error(v, "STRING", "DOUBLE")
+    return w
+
+
+def _inferred_kind(values) -> type | None:
+    """The Python type standing for the column type ``createDataFrame``
+    infers from ``values`` (pyspark.sql.types._merge_type, row by row):
+    null fits any type, a string absorbs any other scalar, two other
+    scalar types conflict.  None when every value is null."""
+    from pyspark.errors import PySparkTypeError
+    kind = None
+    for v in values:
+        t = type(v)
+        if v is None or t is kind:
+            continue
+        if t not in _INFERRED:
+            raise TypeError(f"{t.__name__} values cannot be appended to a "
+                            f"tag table")
+        if kind is None:
+            kind = t
+        elif str in (kind, t):
+            kind = str
+        else:
+            raise PySparkTypeError(
+                errorClass="CANNOT_MERGE_TYPE",
+                messageParameters={"data_type1": _INFERRED[kind],
+                                   "data_type2": _INFERRED[t]})
+    return kind
+
+
+def _conform(values: list, kind: type) -> list:
+    """Values as ``createDataFrame`` stores them in the inferred type: a
+    string column holds other scalars as ``str`` renders them (booleans
+    in lower case), a long column nulls what overflows 64 bits."""
+    if kind is str:
+        return [v if v is None or type(v) is str else
+                ("true" if v else "false") if type(v) is bool else str(v)
+                for v in values]
+    if kind is int:
+        return [v if v is None or _LONG_MIN <= v <= _LONG_MAX else None
+                for v in values]
+    return values
+
+
+def _day_dir(t: int | None, memo: dict) -> str:
+    """``_day=yyyyMMdd`` of epoch-ns ``t`` as a UTC date, the value
+    ``write_tag_table``'s date_format(timestamp_micros(t // 1000)) gives."""
+    if t is None:
+        return "_day=" + _NULL_DAY
+    if t - t % 1000 < _LONG_MIN:         # the ANSI subtraction overflows
+        raise ArithmeticError(
+            "[ARITHMETIC_OVERFLOW] long overflow. Use 'try_subtract' to "
+            "tolerate overflow and return NULL instead. SQLSTATE: 22003")
+    dn = t // _DAY_NS
+    s = memo.get(dn)
+    if s is None:
+        d = date.fromordinal(_EPOCH_ORDINAL + dn)
+        s = memo[dn] = f"_day={d.year:04d}{d.month:02d}{d.day:02d}"
+    return s
+
+
+def append_tag_rows(spark: SparkSession, path: str, cols: Sequence[str],
+                    rows: Sequence[Sequence]) -> int:
+    """Append rows held in driver memory to the tag table at ``path``
+    without a Spark job; returns the number of rows written.
+
+    The result is what ``createDataFrame(rows, cols)`` with ``time`` cast
+    to long and ``value`` to double, written by ``write_tag_table``, would
+    give: the same inferred column types, the same ANSI cast results and
+    errors, one snappy parquet file per ``_day`` directory the batch
+    touches, with rows sorted by (name, time), nulls first.  Rows longer
+    than ``cols`` get ``_<n>`` columns as ``createDataFrame`` names them.
+
+    Every file is written under a hidden name (Spark and DuckDB listings
+    skip a leading ``.``) and renamed into place only once all are
+    written, so a rejected or failed batch leaves no file behind and a
+    concurrent reader never sees a partial file.  Concurrent appends to
+    one table touch disjoint file names.
+    """
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.errors import PySparkValueError
+
+    if not rows:
+        return 0
+    width = max(len(r) for r in rows)
+    if width < len(cols) or any(len(r) != width for r in rows):
+        short = min(len(r) for r in rows)
+        raise ValueError(
+            f"[STRUCT_ARRAY_LENGTH_MISMATCH] Input row doesn't have expected "
+            f"number of values required by the schema. "
+            f"{max(width, len(cols))} fields are required while {short} "
+            f"values are provided. SQLSTATE: 2201E")
+    names = list(cols) + [f"_{i}" for i in range(len(cols) + 1, width + 1)]
+    seen: set[str] = set()
+    for c in names:
+        if c.lower() in seen:
+            raise ValueError(f"[COLUMN_ALREADY_EXISTS] The column `{c}` "
+                             f"already exists. SQLSTATE: 42711")
+        seen.add(c.lower())
+    columns = [list(c) for c in zip(*rows)]
+    kinds = [_inferred_kind(c) for c in columns]
+    if None in kinds:
+        raise PySparkValueError(errorClass="CANNOT_DETERMINE_TYPE",
+                                messageParameters={})
+    columns = [_conform(c, k) for c, k in zip(columns, kinds)]
+    ti, vi, ni = names.index("time"), names.index("value"), \
+        names.index("name")
+    columns[ti] = [_to_long(v, kinds[ti]) for v in columns[ti]]
+    columns[vi] = [_to_double(v, kinds[vi]) for v in columns[vi]]
+    kinds[ti], kinds[vi] = int, float
+
+    arrow = {str: pa.string(), int: pa.int64(), float: pa.float64(),
+             bool: pa.bool_()}
+    # write_tag_table's withColumn("_day") replaces a user column of that
+    # name, and partitionBy then leaves it out of the files
+    keep = [j for j, c in enumerate(names) if c.lower() != "_day"]
+    table = pa.table([pa.array(columns[j], arrow[kinds[j]]) for j in keep],
+                     names=[names[j] for j in keep])
+    memo: dict = {}
+    by_day: dict[str, list[int]] = {}
+    for i, t in enumerate(columns[ti]):
+        by_day.setdefault(_day_dir(t, memo), []).append(i)
+    name_v, time_v = columns[ni], columns[ti]
+    if kinds[ni] is float:               # Spark orders NaN above all numbers
+        def name_key(v):
+            return (v is not None, v != v, 0.0 if v != v else v)
+    else:
+        def name_key(v):
+            return (v is not None, v)
+
+    def row_key(i):
+        return name_key(name_v[i]), (time_v[i] is not None, time_v[i])
+
+    staged: list[tuple[str, str]] = []
+    try:
+        for day, idx in by_day.items():
+            idx.sort(key=row_key)
+            d = os.path.join(path, day)
+            os.makedirs(d, exist_ok=True)
+            uid = uuid.uuid4()
+            staged.append((os.path.join(d, f".{uid}.tmp"),
+                           os.path.join(d, f"part-{uid}.snappy.parquet")))
+            pq.write_table(table.take(idx), staged[-1][0],
+                           compression="snappy")
+    except BaseException:
+        for tmp, _final in staged:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(tmp)
+        raise
+    for tmp, final in staged:
+        os.replace(tmp, final)
+    spark.catalog.refreshByPath(path)
+    return len(rows)
 
 
 def compact_tag_table(

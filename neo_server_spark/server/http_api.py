@@ -87,6 +87,15 @@ def _ident_ok(v: str) -> bool:
         "\n" not in v
 
 
+def _epoch_ns(t) -> int:
+    """A lake record's time as the TAG table's BIGINT holds it; a time
+    outside that range fails its record."""
+    n = int(t)
+    if not -(1 << 63) <= n < 1 << 63:
+        raise OverflowError(f"time {n} is out of BIGINT range")
+    return n
+
+
 class EngineHttpServer:
     """Threaded HTTP front over a SparkSession."""
 
@@ -677,24 +686,22 @@ class EngineHttpServer:
                                  .timestamp() * 1e9)
                     else:
                         ts = int(t)
-                    rows.append((tag, ts, float(v)))
+                    rows.append((tag, _epoch_ns(ts), float(v)))
                 except Exception:
                     fail += 1
         else:
             for rec in values:
                 try:
-                    rows.append((str(rec["Tag"]), int(rec["Ts"]),
+                    rows.append((str(rec["Tag"]), _epoch_ns(rec["Ts"]),
                                  float(rec["Val"])))
                 except Exception:
                     fail += 1
         succ = 0
         if rows:
             from neo_server_spark import io as nio
-            df = self.spark.createDataFrame(
-                rows, "name string, time long, value double")
-            path = (self.fs_root or "/tmp") + "/TAG"
-            nio.write_tag_table(df, path, mode="append")
-            succ = len(rows)
+            succ = nio.append_tag_rows(
+                self.spark, (self.fs_root or "/tmp") + "/TAG",
+                ["name", "time", "value"], rows)
         payload = _json.dumps(
             {"success": True, "reason": "success",
              "data": {"success": succ, "fail": fail}},
@@ -828,9 +835,10 @@ class EngineHttpServer:
 
     def _ingest(self, table: str, cols, rows) -> int:
         """Route parsed rows into the target: DDL engine tables through the
-        catalog (per-column machbase coercion), everything else appended as
-        parquet through the tag-table writer (http_write.go's appender
-        path; micro-batching is Spark's writer here)."""
+        catalog (per-column machbase coercion), tag-shaped rows appended
+        to the parquet tag table by the driver-side Arrow appender
+        (``io.append_tag_rows``, no Spark job — http_write.go's in-process
+        appender path), any other shape appended as plain parquet."""
         from neo_server_spark.sqlx import ddl
         if ddl.has_table(table):
             t = ddl._TABLES[table.lower()]
@@ -838,15 +846,11 @@ class EngineHttpServer:
             return ddl.insert_rows(self.spark, table, cs, rows)
         from neo_server_spark import io as nio
         cs = cols or ["name", "time", "value"][: len(rows[0])]
-        df = self.spark.createDataFrame([tuple(r) for r in rows], cs)
         path = (self.fs_root or "/tmp") + "/" + table
         if {"name", "time", "value"} <= set(cs):
-            from pyspark.sql import functions as F
-            df = df.withColumn("time", F.col("time").cast("long")) \
-                   .withColumn("value", F.col("value").cast("double"))
-            nio.write_tag_table(df, path, mode="append")
-        else:
-            df.write.mode("append").parquet(path)
+            return nio.append_tag_rows(self.spark, path, cs, rows)
+        df = self.spark.createDataFrame([tuple(r) for r in rows], cs)
+        df.write.mode("append").parquet(path)
         return len(rows)
 
     # -------------------------------------------------- /web/api/timers/*

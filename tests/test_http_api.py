@@ -121,6 +121,41 @@ def test_db_write_csv_and_ndjson(server, spark):
     assert got.value == 1.25 and got.time == 7000000000
 
 
+def test_db_write_concurrent_appends(server, spark, tmp_path):
+    """Three clients append 15 CSV batches of 20 rows each into one
+    parquet tag table at once: every request is acknowledged and the
+    table holds exactly the acknowledged rows."""
+    import threading
+    acked, failed, lock = [], [], threading.Lock()
+
+    def writer(w: int) -> None:
+        for k in range(15):
+            rows = [(f"c{w}", (w * 10**6 + k * 20 + i) * 10**9,
+                     float(w * 1000 + k * 20 + i)) for i in range(20)]
+            body = "".join(f"{n},{t},{v}\n" for n, t, v in rows).encode()
+            try:
+                st, _, out = post(f"{server}/db/write/cw?format=csv", body)
+                ok = st == 200 and json.loads(out)["success"]
+            except Exception as ex:         # HTTPError on a 500
+                ok, out = False, repr(ex)
+            with lock:
+                if ok:
+                    acked.extend(rows)
+                else:
+                    failed.append(out)
+
+    threads = [threading.Thread(target=writer, args=(w,)) for w in range(3)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert failed == [] and len(acked) == 900
+    got = spark.read.parquet(str(tmp_path / "cw")) \
+        .selectExpr("count(*)", "sum(value)").first()
+    assert (got[0], got[1]) == (len(acked), sum(v for _n, _t, v in acked))
+
+
 def test_db_query_gzip(server):
     import gzip
     q = urllib.parse.quote("select name, value from example")
@@ -251,6 +286,24 @@ def test_lake_post_values(server, spark, tmp_path):
     except urllib.error.HTTPError as e:
         assert e.code == 412
         assert json.loads(e.read().decode())["reason"] == "values is empty"
+
+
+def test_lake_post_values_time_out_of_range_fails_record(server, spark,
+                                                         tmp_path):
+    """A time beyond BIGINT fails its own record; the rest are stored."""
+    body = json.dumps({"values": [
+        {"Tag": "lk1", "Ts": 1700000000000000000, "Val": 1.5},
+        {"Tag": "lk1", "Ts": 2**63, "Val": 2.5},
+    ]}).encode()
+    _, _, out = post(f"{server}/lakes/values", body, "application/json")
+    assert json.loads(out)["data"] == {"success": 1, "fail": 1}
+    body = json.dumps({"tag_name": "lk3", "date_format": "YYYY-MM-DD",
+                       "values": [["9999-01-01", 7.25]]}).encode()
+    _, _, out = post(f"{server}/lakes/values/standard", body,
+                     "application/json")
+    assert json.loads(out)["data"] == {"success": 0, "fail": 1}
+    got = spark.read.parquet(str(tmp_path / "TAG")).collect()
+    assert [(r.name, r.time) for r in got] == [("lk1", 1700000000000000000)]
 
 
 def test_lake_exec_query(server):

@@ -11,10 +11,13 @@ when exact fails).  Usage:
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file belongs to, whatever the working directory
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def normalize(rows, columns, sort_rows=False):
