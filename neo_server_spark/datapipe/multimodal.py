@@ -259,18 +259,6 @@ def decode_image(payload: bytes) -> "object":
     return _PILImage.open(_io.BytesIO(payload))
 
 
-def resize_image(payload: bytes, width: int, height: int) -> bytes:
-    """Decode → resize → re-encode (PNG); PIL-gated like decode_image."""
-    if _PILImage is None:
-        raise NotImplementedError("image resize requires Pillow")
-    import io as _io
-
-    img = _PILImage.open(_io.BytesIO(payload)).resize((width, height))
-    buf = _io.BytesIO()
-    img.save(buf, format="PNG")
-    return buf.getvalue()
-
-
 FEATURE_SCHEMA = StructType([
     StructField("asset_id", LongType()),
     StructField("modality", StringType()),

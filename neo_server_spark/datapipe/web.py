@@ -84,12 +84,3 @@ def domain_caps(docs: DataFrame, url_col: str = "url", cap: int = 2,
             .filter(F.col("__rk") <= cap)
             .drop("__rk"))
 
-
-def domain_profile(docs: DataFrame, url_col: str = "url") -> DataFrame:
-    """Per-domain corpus profile: docs, total chars — the view capping
-    decisions are made from."""
-    return (docs.withColumn("__dom", url_domain(F.col(url_col)))
-            .groupBy(F.col("__dom").alias("domain"))
-            .agg(F.count(F.lit(1)).alias("n_docs"),
-                 F.sum(F.length("text")).alias("n_chars"))
-            .orderBy("domain"))

@@ -33,14 +33,6 @@ def geo_point(lat, lon) -> Column:
                            _col(lon).cast("string"), _col(lat).cast("string"))
 
 
-def geo_circle(lat, lon, radius_m) -> Column:
-    return F.format_string(
-        '{"type":"Circle","coordinates":[%s,%s],"radius":%s}',
-        _col(lon).cast("string"), _col(lat).cast("string"),
-        _col(radius_m).cast("string") if isinstance(radius_m, Column) else F.lit(str(radius_m)),
-    )
-
-
 def _coords_json(lat_arr, lon_arr) -> Column:
     """array<double> lat + array<double> lon -> '[[lon,lat],...]' JSON text.
     zip_with keeps the pairing JVM-side; no UDF."""

@@ -35,17 +35,6 @@ def str_trim_suffix(c, suffix: str) -> Column:
                   col.substr(F.lit(1), F.length(col) - len(suffix))).otherwise(col)
 
 
-def str_replace(c, old: str, new: str, n: int = -1) -> Column:
-    """strReplace / strReplaceAll; n=-1 replaces all (literal, not regex)."""
-    if n == -1:
-        return F.replace(_col(c), F.lit(old), F.lit(new))
-    # bounded replace: regex with count emulation via n successive replaces
-    out = _col(c)
-    for _ in range(n):
-        out = F.regexp_replace(out, _re.escape(old), new.replace("\\", "\\\\"))
-    return out
-
-
 def str_has_prefix(c, prefix: str) -> Column:
     return _col(c).startswith(prefix)
 

@@ -134,14 +134,6 @@ def time_isoyear(c):
     return F.year(F.date_add(d, 4 - iso_dow))
 
 
-def time_range(from_ns: int, duration: str | int, period: str | int | None = None):
-    """range(ts, dur[, period]) (fm_time.go:23-52) — window alignment params
-    for timewindow(); returns (from, until, period_ns)."""
-    d = parse_duration(duration)
-    p = parse_duration(period) if period is not None else d
-    return from_ns, from_ns + d, p
-
-
 # ---------------------------------------------------------------------------
 # Named timeformats (mods/util/time_formats.go:15-47): the reference resolves
 # sink timeformat('RFC3339') etc. to Go reference-time layouts.  We keep the

@@ -25,7 +25,7 @@ from datetime import date
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from neo_server_spark.session import ensure_engine_conf
+from neo_server_spark.session import ensure_engine_conf, session_catalog
 
 TABLES = (
     "region",
@@ -41,9 +41,6 @@ TABLES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-_df_memo: dict[tuple[int, str], DataFrame] = {}
 
 
 def _normalize_basetime(df: DataFrame, cols: Sequence[str]) -> DataFrame:
@@ -80,15 +77,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``events.ts`` is surfaced as LongType epoch-ns (the engine's canonical
     basetime) whatever the parquet physical type — see ``_normalize_basetime``.
 
-    The (session, path) → DataFrame handle is memoized: repeated queries in
-    one session reuse the resolved relation instead of re-reading footers.
+    The path → DataFrame handle is memoized per session (``SessionCatalog``):
+    repeated queries in one session reuse the resolved relation instead of
+    re-reading footers.
     """
-    key = (id(spark), os.path.join(sf_dir, f"{name}.parquet"))
-    if key not in _df_memo:
+    frames = session_catalog(spark).frames
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if path not in frames:
         ensure_engine_conf(spark)
-        df = spark.read.parquet(key[1])
-        _df_memo[key] = _normalize_basetime(df, _BASETIME_COLS.get(name, ()))
-    return _df_memo[key]
+        df = spark.read.parquet(path)
+        frames[path] = _normalize_basetime(df, _BASETIME_COLS.get(name, ()))
+    return frames[path]
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -96,9 +95,27 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 
 
 def register_views(spark: SparkSession, sf_dir: str, prefix: str = "") -> None:
-    """Register every TESTDATA table as a temp view for spark.sql() queries."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(prefix + name)
+    """Register every TESTDATA table as a temp view for spark.sql() queries.
+
+    This is the one catalog call every SQL read goes through.  The
+    session's ``SessionCatalog`` remembers which ``sf_dir`` each view
+    shows, so once a session holds that directory's views the call makes
+    no py4j call at all; a different ``sf_dir`` on the same session
+    registers its own views over them.  A DDL table with a TESTDATA name
+    keeps its view (it is never replaced here); ``ddl.drop_table`` makes
+    the registry forget the name, so the next call restores the TESTDATA
+    view.
+    """
+    from neo_server_spark.sqlx import ddl
+
+    cat = session_catalog(spark)
+    with cat.lock:
+        for name in TABLES:
+            view = prefix + name
+            if cat.views.get(view.lower()) == sf_dir or ddl.has_table(view):
+                continue
+            load_table(spark, sf_dir, name).createOrReplaceTempView(view)
+            cat.views[view.lower()] = sf_dir
 
 
 def scan_time_range(
@@ -156,13 +173,19 @@ def events_as_tag(
     Extra columns ride along like a wide tag table's extra columns
     (reference DDL with extra cols: spi/testsuite/tagtable.go:237-244).
     Pass ``from_ns``/``until_ns`` to get a pushdown-guaranteed time-range
-    scan (see ``scan_time_range``).
+    scan (see ``scan_time_range``).  The unranged frame is memoized per
+    session, so callers that key on it (the lake views) see one frame.
     """
     if from_ns is None and until_ns is None:
-        ev = load_table(spark, sf_dir, "events")
-    else:
-        ev = scan_time_range(spark, sf_dir, "events", "ts",
-                             from_ns, until_ns, until_inclusive)
+        memo = session_catalog(spark).tag_frames
+        if sf_dir not in memo:
+            memo[sf_dir] = _tag_shape(load_table(spark, sf_dir, "events"))
+        return memo[sf_dir]
+    return _tag_shape(scan_time_range(spark, sf_dir, "events", "ts",
+                                      from_ns, until_ns, until_inclusive))
+
+
+def _tag_shape(ev: DataFrame) -> DataFrame:
     return ev.select(
         F.col("event_type").alias("name"),
         F.col("ts").alias("time"),
@@ -171,13 +194,6 @@ def events_as_tag(
         F.col("user_id"),
         F.col("props"),
     )
-
-
-def with_event_time(df: DataFrame, time_col: str = "time", out: str = "event_ts") -> DataFrame:
-    """Derive a microsecond TimestampType column from epoch-ns for window ops."""
-    from neo_server_spark.functions.timefn import to_timestamp_ns
-
-    return df.withColumn(out, to_timestamp_ns(time_col))
 
 
 def write_tag_table(
@@ -252,8 +268,12 @@ def write_tag_table(
         # ZORDER-lite: (name, time)-sorted rows give parquet row groups tight
         # min/max stats, so tag and time-range predicates skip whole row
         # groups at scan time — the reference's per-tag partitioned storage
-        # gets the same effect structurally (machbase_template.conf:520)
-        out = out.sortWithinPartitions(name_col, time_col)
+        # gets the same effect structurally (machbase_template.conf:520).
+        # The partition columns lead: the partitioned write needs its rows
+        # ordered by them, and a sort that already meets that requirement
+        # is kept, where one by (name, time) alone is replaced by the
+        # writer's own sort on the partition columns.
+        out = out.sortWithinPartitions(*parts, name_col, time_col)
     out.write.partitionBy(*parts).mode(mode).parquet(path)
 
 

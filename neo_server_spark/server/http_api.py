@@ -529,14 +529,17 @@ class EngineHttpServer:
     # ------------------------------------------------------- /lakes/values
 
     def _lake_tag_df(self):
-        """The session's tag table for the lake endpoints: the registered
-        TAG view if the user created one, else the canonical events
-        mapping."""
+        """The base frame of the lake endpoints' TAG view: the DDL table
+        named ``tag`` when one exists (a new frame after each write to
+        it), else the canonical events mapping, one frame per session.
+        It never reads the TAG view itself, so TAG is never rebuilt from
+        its own previous plan, and ``register_lake_views`` re-registers
+        only when this frame changes."""
         from neo_server_spark import io as nio
-        try:
-            return self.spark.table("TAG")
-        except Exception:
-            return nio.events_as_tag(self.spark, self.sf_dir)
+        from neo_server_spark.sqlx import ddl
+        if ddl.has_table("tag"):
+            return ddl.table_frame("tag")
+        return nio.events_as_tag(self.spark, self.sf_dir)
 
     def _handle_lake_values(self, h, dtype: str, qs: dict,
                             tick: float) -> None:

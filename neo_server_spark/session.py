@@ -12,6 +12,7 @@ matching machbase DATETIME int64-ns semantics, spi/machsvr/machsvr.go:901-917).
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -82,3 +83,66 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
         except Exception:
             pass  # non-settable on this build — keep going
     return spark
+
+
+class SessionCatalog:
+    """What the program has registered in one SparkSession's catalog.
+
+    The reference hands each query a pooled connection to the engine's
+    persistent catalog and registers nothing per query
+    (spi/database.go:67-100).  This registry plays that role: a view or
+    SQL function is (re)registered only when its source changed, so a
+    steady stream of reads makes no catalog calls at all.  It lives on
+    the session object, so a new session never inherits a stopped one's
+    state.
+    """
+
+    def __init__(self) -> None:
+        self.lock = threading.RLock()
+        #: lower-cased temp view name -> sf_dir whose TESTDATA table it shows
+        self.views: dict[str, str] = {}
+        #: parquet path -> loaded, basetime-normalized frame
+        self.frames: dict = {}
+        #: sf_dir -> ``events`` in the tag shape
+        self.tag_frames: dict = {}
+        #: the lake dialect's SQL functions are registered
+        self.dialect = False
+        #: the frame TAG / TAG_STAT were last registered from
+        self.lake_base = None
+
+    def forget(self, name: str) -> None:
+        """The view ``name`` no longer shows what the registry put there:
+        the next read that needs it registers it again."""
+        name = name.lower()
+        with self.lock:
+            self.views.pop(name, None)
+            if name in ("tag", "tag_stat"):
+                self.lake_base = None
+
+    def put_view(self, name: str, df) -> None:
+        """Register ``df`` as the temp view ``name`` for a caller other
+        than the registry (a DDL table, a script's own table)."""
+        with self.lock:
+            df.createOrReplaceTempView(name)
+            self.forget(name)
+
+    def drop_view(self, spark: SparkSession, name: str) -> None:
+        with self.lock:
+            spark.catalog.dropTempView(name)
+            self.forget(name)
+
+
+_CATALOG_ATTR = "_neo_catalog"
+_catalog_lock = threading.Lock()
+
+
+def session_catalog(spark: SparkSession) -> SessionCatalog:
+    """The registry of ``spark``, created on first use."""
+    cat = getattr(spark, _CATALOG_ATTR, None)
+    if cat is None:
+        with _catalog_lock:
+            cat = getattr(spark, _CATALOG_ATTR, None)
+            if cat is None:
+                cat = SessionCatalog()
+                setattr(spark, _CATALOG_ATTR, cat)
+    return cat

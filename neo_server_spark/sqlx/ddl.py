@@ -15,9 +15,13 @@ string, datetime -> epoch-ns long, double/float -> double, integer family
 
 from __future__ import annotations
 
+import functools
 import re
+import threading
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+from neo_server_spark.session import session_catalog
 
 _TYPE_MAP = {
     "varchar": "string", "text": "string", "json": "string",
@@ -31,8 +35,23 @@ _TYPE_MAP = {
 
 #: name -> {"cols": [(name, mach_type, spark_type)], "rows": [tuple],
 #:          "kind": tag|log|volatile|lookup,
-#:          "lengths": [int], "flags": [str]}
+#:          "lengths": [int], "flags": [str],
+#:          "df": the frame the view was last registered from}
 _TABLES: dict[str, dict] = {}
+
+#: held across every change to a table's rows and the view refresh that
+#: follows it, so the view registered last holds the newest rows even
+#: when requests write one table concurrently
+_LOCK = threading.RLock()
+
+
+def _locked(fn):
+    @functools.wraps(fn)
+    def run(*args, **kwargs):
+        with _LOCK:
+            return fn(*args, **kwargs)
+    return run
+
 
 #: engine default column widths by type (DESC output in fm_dbsrc_test.go
 #: SQL_show_table_log_data / SQL_desc_tag_data — spi column-size
@@ -64,8 +83,14 @@ def _schema_ddl(cols) -> str:
 
 def _refresh_view(spark: SparkSession, name: str) -> None:
     t = _TABLES[name]
-    df = spark.createDataFrame(t["rows"], _schema_ddl(t["cols"]))
-    df.createOrReplaceTempView(name)
+    t["df"] = spark.createDataFrame(t["rows"], _schema_ddl(t["cols"]))
+    session_catalog(spark).put_view(name, t["df"])
+
+
+def table_frame(name: str) -> DataFrame:
+    """The frame a DDL table's view was last registered from; a new
+    frame after every write."""
+    return _TABLES[name.lower()]["df"]
 
 
 def coerce(value, mach_type: str):
@@ -97,6 +122,7 @@ def coerce(value, mach_type: str):
             f"cannot convert {value!r} to {mach_type}: {ex}") from ex
 
 
+@_locked
 def create_table(spark: SparkSession, sql: str) -> bool:
     """CREATE [TAG|VOLATILE|LOOKUP] TABLE [IF NOT EXISTS] name (cols...)
     [TABLE_OPT=..., ...] — the engine DDL shape (server tag_data/log_data
@@ -168,12 +194,15 @@ def create_table(spark: SparkSession, sql: str) -> bool:
     return True
 
 
+@_locked
 def drop_table(spark: SparkSession, name: str) -> None:
+    """DROP TABLE: the view goes too, and the session's registry forgets
+    the name, so a TESTDATA view it shadowed comes back on the next read."""
     name = name.lower()
     if name not in _TABLES:
         raise DdlError(f"table {name} does not exist")
     del _TABLES[name]
-    spark.catalog.dropTempView(name)
+    session_catalog(spark).drop_view(spark, name)
 
 
 def has_table(name: str) -> bool:
@@ -204,6 +233,7 @@ def json_types(name: str) -> list[str]:
     return [_JSON_TYPE_NAMES.get(m, "string") for _c, m, _s in t["cols"]]
 
 
+@_locked
 def insert_rows(spark: SparkSession, name: str, columns, rows) -> int:
     """Append rows (already positionally matched to `columns`), coercing
     per the declared machbase type; unnamed columns become NULL."""
@@ -368,6 +398,7 @@ def _store_rows(spark: SparkSession, name: str, rows) -> None:
     _refresh_view(spark, name)
 
 
+@_locked
 def _delete_rows(spark: SparkSession, name: str, cond: str | None,
                  params) -> int:
     """DELETE FROM t [WHERE cond] — the engine's mutable-table surface
@@ -412,6 +443,7 @@ def _indexed_eval(spark: SparkSession, name: str, select: str):
     return {r["__i"]: r for r in out}
 
 
+@_locked
 def _update_rows(spark: SparkSession, name: str, setc: str,
                  cond: str | None, params) -> int:
     """UPDATE t SET c = expr[, ...] [WHERE cond] — per-column CASE

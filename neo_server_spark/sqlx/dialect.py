@@ -18,26 +18,35 @@ import re
 
 from pyspark.sql import SparkSession
 
+from neo_server_spark.session import session_catalog
+
+
 def register_dialect(spark: SparkSession) -> None:
     """Register dialect helpers as SQL functions usable in spark.sql().
 
     Implemented as SQL UDFs (Spark 3.4+ `CREATE FUNCTION ... RETURN`) — pure
     SQL bodies, so Catalyst inlines them: zero UDF overhead.  DECODE is
     rewritten textually (it is type-polymorphic; SQL UDFs are typed).
+    Registered once per session; later calls make no catalog call.
     """
-    spark.sql("""
-        CREATE OR REPLACE TEMPORARY FUNCTION date_trunc_ns(unit STRING, t BIGINT, n INT)
-        RETURNS BIGINT RETURN t - pmod(t, n * CASE upper(unit)
-            WHEN 'NSEC' THEN 1
-            WHEN 'USEC' THEN 1000
-            WHEN 'MSEC' THEN 1000000
-            WHEN 'SEC'  THEN 1000000000
-            WHEN 'MIN'  THEN 60000000000
-            WHEN 'MINUTE' THEN 60000000000
-            WHEN 'HOUR' THEN 3600000000000
-            WHEN 'DAY'  THEN 86400000000000
-            END)
-    """)
+    cat = session_catalog(spark)
+    with cat.lock:
+        if cat.dialect:
+            return
+        spark.sql("""
+            CREATE OR REPLACE TEMPORARY FUNCTION date_trunc_ns(unit STRING, t BIGINT, n INT)
+            RETURNS BIGINT RETURN t - pmod(t, n * CASE upper(unit)
+                WHEN 'NSEC' THEN 1
+                WHEN 'USEC' THEN 1000
+                WHEN 'MSEC' THEN 1000000
+                WHEN 'SEC'  THEN 1000000000
+                WHEN 'MIN'  THEN 60000000000
+                WHEN 'MINUTE' THEN 60000000000
+                WHEN 'HOUR' THEN 3600000000000
+                WHEN 'DAY'  THEN 86400000000000
+                END)
+        """)
+        cat.dialect = True
 
 
 _SCAN_BACKWARD = re.compile(r"/\*\+\s*SCAN_BACKWARD\(\s*(\w+)\s*\)\s*\*/", re.I)

@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from neo_server_spark.session import session_catalog
+
 #: lake plan limits (http_lake.go lakePlanMap "basic" row)
 LIMIT_SELECT_TAG = 100
 LIMIT_SELECT_VALUE = 10000
@@ -252,9 +254,15 @@ def select_return(df: DataFrame, mode: str, fmt: str,
 
 def register_lake_views(spark: SparkSession, tag_df: DataFrame) -> None:
     """Register the TAG and TAG_STAT views the lake SQL shapes address
-    (machbase's TAG / V$TAG_STAT)."""
+    (machbase's TAG / V$TAG_STAT).  A no-op while ``tag_df`` is the frame
+    they were last registered from in this session."""
     from neo_server_spark.sqlx import catalog
-    up = tag_df.select(
-        *[tag_df[c].alias(c.upper()) for c in tag_df.columns])
-    up.createOrReplaceTempView("TAG")
-    catalog.show_tags_full(tag_df).createOrReplaceTempView("TAG_STAT")
+    cat = session_catalog(spark)
+    with cat.lock:
+        if cat.lake_base is tag_df:
+            return
+        up = tag_df.select(
+            *[tag_df[c].alias(c.upper()) for c in tag_df.columns])
+        up.createOrReplaceTempView("TAG")
+        catalog.show_tags_full(tag_df).createOrReplaceTempView("TAG_STAT")
+        cat.lake_base = tag_df

@@ -33,6 +33,7 @@ from neo_server_spark.operators import group as G
 from neo_server_spark.operators import maps as M
 from neo_server_spark.operators import series as S
 from neo_server_spark.operators import stats as ST
+from neo_server_spark.session import session_catalog
 from neo_server_spark.tql import fake as FK
 
 
@@ -62,11 +63,13 @@ class Tql:
 
     def sql(self, query: str) -> "Pipeline":
         """SQL('select ...') — run SQL against registered temp views
-        (fm_dbsrc.go:312-384 → spark.sql)."""
-        for name, df in self._tables.items():
-            df.createOrReplaceTempView(name)
+        (fm_dbsrc.go:312-384 → spark.sql).  The shared TESTDATA views come
+        first, so a table given to ``register()`` wins over one of the
+        same name on every call."""
         if self.sf_dir is not None:
             nio.register_views(self.spark, self.sf_dir)
+        for name, df in self._tables.items():
+            session_catalog(self.spark).put_view(name, df)
         return Pipeline(self.spark.sql(query))
 
     def sql_select(

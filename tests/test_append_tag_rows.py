@@ -5,10 +5,9 @@ The oracle is what the server ran before: ``createDataFrame(rows, cols)``,
 ``io.write_tag_table``.  Each row set goes through both paths into two
 directories; the tables read back with Spark must hold the same schema,
 the same ``_day`` directories and the same rows, or both paths must
-raise.  The Spark writer keeps its input order inside a file (the
-planner's own sort by ``_day`` replaces ``write_tag_table``'s clustering
-sort), so the oracle's rows are compared per day as multisets and the
-appender's (name, time) order is asserted on its own files.
+raise.  Rows are compared per day as multisets (ties in (name, time) may
+land in either order); the appender's (name, time) order is asserted on
+its own files, and ``write_tag_table``'s in its own test.
 """
 
 import glob
@@ -150,6 +149,25 @@ def test_append_tag_rows_matches_spark_writer(spark, tmp_path, case):
         ni, ti = names.index("name"), names.index("time")
         keys = [(_sort_key(r[ni]), _sort_key(r[ti])) for r in mine_rows]
         assert keys == sorted(keys)
+
+
+def test_write_tag_table_clusters_files_by_name_and_time(spark, tmp_path):
+    """``write_tag_table``'s (name, time) clustering reaches the files:
+    read back with pyarrow, each day's file is in (name, time) order with
+    nulls first, not in input order."""
+    rows = [("b", 5, 1.0), ("a", 9, 2.0), (None, 3, 3.0), ("b", 1, 4.0),
+            ("a", 2, 5.0), ("a", 4, 6.0), ("c", 8, 7.0), (None, 1, 8.0),
+            ("b", DAY + 2, 9.0), ("a", DAY + 3, 10.0), ("a", DAY + 1, 11.0)]
+    path = str(tmp_path / "w")
+    _spark_append(spark, path, NTV, rows)
+    files = _day_files(path)
+    assert sorted(files) == ["_day=19700101", "_day=19700102"]
+    for day, (f,) in files.items():
+        got = [(r["name"], r["time"]) for r in pq.read_table(f).to_pylist()]
+        want = sorted(((n, t) for n, t, _v in rows
+                       if (t >= DAY) == day.endswith("02")),
+                      key=lambda nt: (_sort_key(nt[0]), nt[1]))
+        assert got == want
 
 
 def test_append_tag_rows_one_file_per_day_and_no_spark_job(spark, tmp_path):

@@ -36,10 +36,11 @@ def server(spark, sf_dir, tmp_path):
         ddl._refresh_view(spark, n)
     # the server registered the TESTDATA views on query — drop them so
     # later catalog-shape tests (SHOW TABLES batteries) see a clean slate
+    from neo_server_spark.session import session_catalog
     for n in ("region", "nation", "customer", "supplier", "part", "orders",
               "lineitem", "events", "documents", "embeddings"):
         try:
-            spark.catalog.dropTempView(n)
+            session_catalog(spark).drop_view(spark, n)
         except Exception:
             pass
 

@@ -121,10 +121,9 @@ def test_db_write_csv_and_ndjson(server, spark):
     assert got.value == 1.25 and got.time == 7000000000
 
 
-def test_db_write_concurrent_appends(server, spark, tmp_path):
-    """Three clients append 15 CSV batches of 20 rows each into one
-    parquet tag table at once: every request is acknowledged and the
-    table holds exactly the acknowledged rows."""
+def _concurrent_csv_writes(server: str, table: str):
+    """Three clients post 15 CSV batches of 20 tag rows each to
+    /db/write/<table> at once; returns (acknowledged rows, failures)."""
     import threading
     acked, failed, lock = [], [], threading.Lock()
 
@@ -134,7 +133,8 @@ def test_db_write_concurrent_appends(server, spark, tmp_path):
                      float(w * 1000 + k * 20 + i)) for i in range(20)]
             body = "".join(f"{n},{t},{v}\n" for n, t, v in rows).encode()
             try:
-                st, _, out = post(f"{server}/db/write/cw?format=csv", body)
+                st, _, out = post(f"{server}/db/write/{table}?format=csv",
+                                  body)
                 ok = st == 200 and json.loads(out)["success"]
             except Exception as ex:         # HTTPError on a 500
                 ok, out = False, repr(ex)
@@ -150,10 +150,37 @@ def test_db_write_concurrent_appends(server, spark, tmp_path):
     for t in threads:
         t.join(timeout=300)
     assert not any(t.is_alive() for t in threads)
+    return acked, failed
+
+
+def test_db_write_concurrent_appends(server, spark, tmp_path):
+    """Three clients append 15 CSV batches of 20 rows each into one
+    parquet tag table at once: every request is acknowledged and the
+    table holds exactly the acknowledged rows."""
+    acked, failed = _concurrent_csv_writes(server, "cw")
     assert failed == [] and len(acked) == 900
     got = spark.read.parquet(str(tmp_path / "cw")) \
         .selectExpr("count(*)", "sum(value)").first()
     assert (got[0], got[1]) == (len(acked), sum(v for _n, _t, v in acked))
+
+
+def test_db_write_concurrent_ddl_inserts(server, spark):
+    """The same three concurrent clients writing one CREATE TAG TABLE
+    table: the view read afterwards holds every acknowledged row (each
+    write's row change and view refresh run under one lock, so an older
+    snapshot can never be registered last)."""
+    from neo_server_spark.sqlx import ddl
+    ddl.exec_sql(spark, "CREATE TAG TABLE cwd(name varchar(40) primary "
+                        "key, time datetime basetime, "
+                        "value double summarized)")
+    acked, failed = _concurrent_csv_writes(server, "cwd")
+    assert failed == [] and len(acked) == 900
+    got = spark.table("cwd").selectExpr("count(*)", "sum(value)").first()
+    assert (got[0], got[1]) == (len(acked), sum(v for _n, _t, v in acked))
+    q = urllib.parse.quote("select count(*) AS n, sum(value) AS s from cwd")
+    _, _, body = get(f"{server}/db/query?q={q}&format=json")
+    assert json.loads(body)["data"]["rows"] == [
+        [len(acked), sum(v for _n, _t, v in acked)]]
 
 
 def test_db_query_gzip(server):
