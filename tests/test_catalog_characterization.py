@@ -8,7 +8,7 @@ from the ``elapse`` field, however those views are registered.
 
 Re-record (only when an output is meant to change):
 
-    python tests/test_catalog_characterization.py /root/testdata/sf0.001
+    python tests/test_catalog_characterization.py <path of the sf0.001 dataset>
 """
 
 import json
